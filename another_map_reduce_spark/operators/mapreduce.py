@@ -20,6 +20,13 @@ over DataFrames, with three execution paths ordered fastest-first:
 
 All paths end in a typed DataFrame so downstream relational operators
 compose with the result.
+
+``num_buckets`` ≙ the reference's ``-n num_buckets`` (src/main.rs:21-24):
+the reduce-side partition count, honoured exactly when given.  When it
+is ``None`` each path keeps its engine's own default: the RDD paths use
+Spark's RDD default (``spark.default.parallelism`` if set, else the
+input's partition count, which grows with the data), and the pandas path
+leaves the shuffle to AQE under ``spark.sql.shuffle.partitions``.
 """
 
 from __future__ import annotations
@@ -38,14 +45,6 @@ MergeFn = Callable[[Any, Any], Any]
 
 def _out_schema(key_type: str, value_type: str) -> str:
     return f"key {key_type}, value {value_type}"
-
-
-def _num_buckets(df: DataFrame, num_buckets: int | None) -> int:
-    # ≙ the reference's `-n num_buckets` (src/main.rs:21-24): reduce-side
-    # parallelism. Default to the session shuffle setting.
-    if num_buckets is not None:
-        return num_buckets
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
 
 
 def map_reduce(
@@ -68,10 +67,9 @@ def map_reduce(
     Scale note: this path materialises every value list; prefer
     ``map_reduce_associative`` whenever the reduction is a fold.
     """
-    r = _num_buckets(df, num_buckets)
     pairs = df.rdd.flatMap(map_fn)
     reduced = (
-        pairs.groupByKey(numPartitions=r)  # ≙ BTreeMap gather, src/worker.rs:118
+        pairs.groupByKey(numPartitions=num_buckets)  # ≙ BTreeMap gather, src/worker.rs:118
         .map(lambda kv: reduce_fn(kv[0], list(kv[1])))
     )
     return df.sparkSession.createDataFrame(
@@ -94,8 +92,7 @@ def map_reduce_associative(
     values — e.g. word count: emit ``(word, 1)``, merge ``+`` ≡
     ``len(values)`` (src/worker.rs:36-38).
     """
-    r = _num_buckets(df, num_buckets)
-    reduced = df.rdd.flatMap(map_fn).reduceByKey(merge_fn, numPartitions=r)
+    reduced = df.rdd.flatMap(map_fn).reduceByKey(merge_fn, numPartitions=num_buckets)
     return df.sparkSession.createDataFrame(
         reduced, schema=_out_schema(key_type, value_type)
     )
@@ -134,8 +131,6 @@ def map_reduce_pandas(
     map-side-combine role the associative RDD path gets from
     reduceByKey.
     """
-    r = _num_buckets(df, num_buckets)
-
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             out = map_batch_fn(batch)
@@ -149,7 +144,9 @@ def map_reduce_pandas(
         return mapped.groupBy(key_col).agg(*finish_aggs)
     if reduce_group_fn is None:
         raise ValueError("need reduce_group_fn or finish_aggs")
-    return mapped.repartition(r, key_col).groupBy(key_col).applyInPandas(
+    if num_buckets is not None:
+        mapped = mapped.repartition(num_buckets, key_col)
+    return mapped.groupBy(key_col).applyInPandas(
         lambda g: reduce_group_fn(g), schema=out_schema
     )
 

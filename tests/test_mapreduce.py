@@ -53,11 +53,41 @@ def test_associative_equals_faithful(spark, kv_df):
 
 
 def test_num_buckets_controls_partitions(spark, kv_df):
+    """An explicit ``num_buckets`` (≙ ``-n``) fixes the reduce width; without
+    it the RDD paths take Spark's RDD default (the input's partition count
+    here, not the session's 4-wide SQL shuffle) and the pandas path plans
+    no fixed-count repartition."""
     out = map_reduce_associative(
         kv_df, lambda r: [(r.k, r.v)], lambda a, b: a + b, num_buckets=2,
         value_type="long",
     )
     assert out.rdd.getNumPartitions() == 2
+
+    three = spark.createDataFrame(
+        spark.sparkContext.parallelize([("a", 1), ("b", 2), ("c", 3)], 3),
+        "k string, v int",
+    )
+    fold = map_reduce_associative(
+        three, lambda r: [(r.k, r.v)], lambda a, b: a + b, value_type="long"
+    )
+    gather = map_reduce(
+        three, lambda r: [(r.k, r.v)], lambda k, vs: (k, sum(vs)), value_type="long"
+    )
+    assert fold.rdd.getNumPartitions() == gather.rdd.getNumPartitions() == 3
+
+    def pandas_plan(num_buckets):
+        out = map_reduce_pandas(
+            kv_df,
+            lambda b: b.rename(columns={"k": "key"}),
+            lambda g: g,
+            map_schema="key string, v int",
+            out_schema="key string, v int",
+            num_buckets=num_buckets,
+        )
+        return out._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "RepartitionByExpression" not in pandas_plan(None)
+    assert "RepartitionByExpression" in pandas_plan(2)
 
 
 def test_pandas_path_wordcount(spark):

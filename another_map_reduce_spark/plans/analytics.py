@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from another_map_reduce_spark.functions.aggs import _dec, dsum
 from another_map_reduce_spark.queries import register
+from another_map_reduce_spark.session import scoped_conf, shuffle_width
 from another_map_reduce_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -541,10 +542,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     wall, BENCH_SCALE_r9rel).  [extension].
     """
     from another_map_reduce_spark.operators.graph import label_propagation
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
-    from another_map_reduce_spark.session import shuffle_width
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -578,7 +575,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width from leaking into the caller's session).
     n_orders = orders.count()
     width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(width)}):
         labels = label_propagation(edges, iters=_LPA_ITERS)
         top = (
             labels.groupBy(F.col("label").alias("community"))
@@ -668,10 +665,6 @@ def ppr_seed_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     9-digit rounded rank; zero-mass nodes (unreached from the seeds)
     are excluded on both sides.  [extension].
     """
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
-    from another_map_reduce_spark.session import shuffle_width
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -702,7 +695,7 @@ def ppr_seed_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_orders = orders.count()
     width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(width)}):
         edges = edges.repartition("src").localCheckpoint(eager=False)
         deg = edges.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("d")
@@ -819,10 +812,6 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         community_modularity,
         label_propagation,
     )
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
-    from another_map_reduce_spark.session import shuffle_width
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -853,7 +842,7 @@ def graph_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_orders = orders.count()
     width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(width)}):
         edges = edges.localCheckpoint(eager=False)
         labels = label_propagation(edges, iters=_LPA_ITERS)
         top = (
@@ -941,15 +930,11 @@ def pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The whole computation is driven to completion inside the scope
     # (eager checkpoint of the 20-row result), so the narrowed width
     # can't leak into the caller's session.
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
 
     n_orders = orders.count()  # metadata-only: parquet row-count stats
-    from another_map_reduce_spark.session import shuffle_width
 
     width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(width)}):
         ranks = pagerank(edges)
         top = (
             ranks.select(
@@ -1324,7 +1309,7 @@ def zorder_layout_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench/test runs (a pid-keyed path leaked one layout per process).
     # Correct under the serial driver/bench/test harnesses — two
     # processes rewriting the same sf concurrently would race, the same
-    # documented serial-harness contract as _stream_shuffle_partitions.
+    # documented serial-harness contract as session.scoped_conf.
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = os.path.join(
         tempfile.gettempdir(), f"amrs_zorder_layout_{tag}"
@@ -3162,31 +3147,16 @@ def histogram_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Runtime Bloom-filter join pruning (row-level runtime filter, dim → fact)
 # ---------------------------------------------------------------------------
 
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def _bloom_filter_confs(spark: SparkSession):
-    """Scope the confs that let Catalyst inject a runtime Bloom filter
-    at TEST scale: the injector is ON by default but gated on a 10 GB
-    fact-scan threshold (the 100 TB default is correct — tiny scans
-    don't amortize the build), and it only fires on non-broadcast
-    joins, so the dim side must not auto-broadcast.  Restore-on-exit,
-    NOT reentrant — same serial driver/bench/test harness contract as
-    _stream_shuffle_partitions."""
-    keys = {
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+# The confs that let Catalyst inject a runtime Bloom filter at TEST
+# scale: the injector is ON by default but gated on a 10 GB fact-scan
+# threshold (the 100 TB default is correct — tiny scans don't amortize
+# the build), and it only fires on non-broadcast joins, so the dim side
+# must not auto-broadcast.  Applied through session.scoped_conf.
+_BLOOM_FILTER_CONFS = {
+    "spark.sql.optimizer.runtime.bloomFilter."
+    "applicationSideScanSizeThreshold": "0",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
 
 
 def _bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3240,7 +3210,7 @@ def bloom_join_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     a lazy return would re-plan at collect time under default confs
     (same answer, no demonstration).
     """
-    with _bloom_filter_confs(spark):
+    with scoped_conf(spark, _BLOOM_FILTER_CONFS):
         out = _bloom_pruned_join(spark, sf_dir).localCheckpoint(eager=True)
     return out.orderBy("l_returnflag")
 
@@ -4141,10 +4111,6 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     [extension] — the reference has no graph surface.
     """
     from another_map_reduce_spark.operators.graph import hits
-    from another_map_reduce_spark.plans.relational import (
-        _stream_shuffle_partitions,
-    )
-    from another_map_reduce_spark.session import shuffle_width
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
@@ -4162,7 +4128,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_orders = orders.count()
     width = max(8, min(shuffle_width(spark), n_orders // 20_000))
-    with _stream_shuffle_partitions(spark, width):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(width)}):
         hubs, auths = hits(e0, iters=_HITS_ITERS)
 
         def _top(df: DataFrame, kind: str) -> DataFrame:

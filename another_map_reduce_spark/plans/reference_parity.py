@@ -213,13 +213,10 @@ def pysource_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from another_map_reduce_spark.functions.text import tokenize
-    from another_map_reduce_spark.plans.relational import (
-        _fresh_sink_name,
-        _stream_shuffle_partitions,
-    )
     from another_map_reduce_spark.sources.pydatasource import (
         register_reftext,
     )
+    from another_map_reduce_spark.streaming.drain import drain_to_memory
 
     docs = load_table(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -236,17 +233,9 @@ def pysource_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
-    qname = _fresh_sink_name("pysource_stream_wordcount")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).orderBy("word")
+    return drain_to_memory(
+        counts, "pysource_stream_wordcount", mode="complete"
+    ).orderBy("word")
 
 
 @register(
@@ -283,13 +272,11 @@ def pysource_stream_sink_roundtrip(
 
     from pyspark.sql import functions as F
 
-    from another_map_reduce_spark.plans.relational import (
-        _events_readstream,
-        _stream_shuffle_partitions,
-    )
+    from another_map_reduce_spark.plans.relational import _events_readstream
     from another_map_reduce_spark.sources.pydatasource import (
         register_reftext,
     )
+    from another_map_reduce_spark.streaming.drain import drain
 
     register_reftext(spark)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -301,15 +288,12 @@ def pysource_stream_sink_roundtrip(
     stream = _events_readstream(spark, sf_dir).select(
         "event_type", "user_id"
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.format("reftext")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        stream.writeStream.format("reftext")
+        .option("path", out)
+        .option("checkpointLocation", ckpt),
+        "pysource_stream_sink_roundtrip",
+    )
 
     back = spark.read.format("reftext").load(os.path.join(out, "part-*"))
     lines = back.select(

@@ -22,13 +22,18 @@ Cross-engine determinism rules (the DuckDB oracle hash-compares):
 
 from __future__ import annotations
 
-import contextlib as _contextlib
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from another_map_reduce_spark.queries import register
+from another_map_reduce_spark.session import scoped_conf
 from another_map_reduce_spark.sources.tables import load_table
+from another_map_reduce_spark.streaming.drain import (
+    drain,
+    drain_to_memory,
+    memory_view,
+    process_all_available,
+)
 
 
 # Shared with plans.tpch_extra via functions.aggs (NOT via an
@@ -829,99 +834,6 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-import itertools as _itertools
-
-_SINK_SEQ = _itertools.count(1)  # count().__next__ is atomic under the GIL
-
-
-def _fresh_sink_name(tag: str) -> str:
-    """Unique memory-sink view name per invocation.
-
-    A fixed name meant a second invocation in the same session clobbered
-    the first result's backing table before it was collected (the same
-    hazard class sink_roundtrip_partitioned documents).  A monotonically
-    suffixed name makes concurrent/repeated invocations safe; the stale
-    views are tiny aggregate tables bounded by invocations-per-session.
-    """
-    return f"_amrs_{tag}_{next(_SINK_SEQ)}"
-
-
-def _process_all_available(q, timeout_s: float = 300.0) -> None:
-    """``q.processAllAvailable()`` under a fail-loud watchdog (ADVICE
-    r13): bare processAllAvailable blocks FOREVER if the source or
-    query wedges without failing, silently hanging the whole bench/
-    correctness suite where the old deadline polls raised.  A daemon
-    watchdog stops the query and raises TimeoutError after
-    ``timeout_s`` — same loud-failure property, none of the
-    recentProgress-ring pitfalls the polls had."""
-    import threading
-
-    done = threading.Event()
-    fired = threading.Event()
-
-    def _watch() -> None:
-        if not done.wait(timeout_s):
-            fired.set()
-            try:
-                q.stop()  # unblocks processAllAvailable
-            except Exception:
-                pass
-
-    t = threading.Thread(target=_watch, daemon=True)
-    t.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        done.set()
-    if fired.is_set():
-        raise TimeoutError(
-            f"streaming drain did not go idle within {timeout_s}s "
-            "(watchdog stopped the query)"
-        )
-
-
-@_contextlib.contextmanager
-def _stream_shuffle_partitions(spark: SparkSession, n: int = 8):
-    """Pin the stateful-shuffle width for a streaming drain.
-
-    Every stateful streaming operator instantiates one state store PER
-    shuffle partition PER micro-batch (a stream-stream join holds
-    four); at the session's batch width of 32 that fixed cost dominates
-    a finite drain — measured at sf0.1: the stream-stream join drops
-    11.4 s → 2.7 s, windowed-agg drains ~2x, going 32 → 8 partitions.
-    Results are partition-count independent; only the drain runs under
-    the narrowed width (the conf is read at query START), and the
-    session width is restored for the post-drain batch aggregation.
-    At scale the same knob is sized to state VOLUME per partition —
-    the point is that stateful width is a deliberate choice, not an
-    inherited batch constant.
-
-    NOT reentrant / thread-safe: this mutates the session-global conf
-    for the drain window, so a query planned concurrently on the same
-    session would pick up the narrowed width or race the restore.
-    The driver, bench, and test harnesses all run queries serially,
-    which is the contract this helper assumes; if concurrent drains
-    ever share a session, give each drain its own
-    ``spark.newSession()`` (confs are per-SparkSession clone) instead
-    of flipping the shared value (r4 advisory).
-    """
-    import os
-
-    # Experiment/deployment override (r14): width A/Bs run the same
-    # binary with SPARK_GRAFT_STREAM_WIDTH=<n> instead of editing each
-    # call site; unset (the default) keeps every row's measured
-    # per-call width.  At scale the same env carries the state-volume-
-    # sized production width.
-    n = int(os.environ.get("SPARK_GRAFT_STREAM_WIDTH", n))
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 def _events_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table, ts normalized.
 
@@ -982,19 +894,9 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed = raw.groupBy(
         F.window("ts", "1 hour").alias("w"), F.col("event_type")
     ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
-    qname = _fresh_sink_name("stream_events_hourly")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(windowed, "stream_events_hourly", mode="complete")
     return (
-        spark.table(qname)
-        .select(
+        out.select(
             F.col("w.start").alias("hour"),
             "event_type",
             "n",
@@ -1047,19 +949,9 @@ def stream_events_hourly_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed = raw.groupBy(
         F.window("ts", "1 hour").alias("w"), F.col("event_type")
     ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
-    qname = _fresh_sink_name("stream_events_hourly_append")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(windowed, "stream_events_hourly_append")
     return (
-        spark.table(qname)
-        .select(
+        out.select(
             F.col("w.start").alias("hour"),
             "event_type",
             "n",
@@ -1133,16 +1025,14 @@ def stream_buslog_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id").cast("string").alias("key"),
             F.to_json(F.struct("event_type", "value")).alias("value"),
         )
-        q = (
+        drain(
             wire.writeStream.format("buslog")
             .option("path", root)
             .option("topic", "events")
             .option("numPartitions", "8")
-            .option("checkpointLocation", os.path.join(root, "_produce_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(root, "_produce_ckpt")),
+            "stream_buslog_produce",
         )
-        q.awaitTermination()
 
     ensure_artifact(
         root,
@@ -1165,19 +1055,11 @@ def stream_buslog_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed = consumed.groupBy(
         F.window("ts", "1 hour").alias("w"), F.col("event_type")
     ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
-    qname = _fresh_sink_name("stream_buslog_events_hourly")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(
+        windowed, "stream_buslog_events_hourly", mode="complete"
+    )
     return (
-        spark.table(qname)
-        .select(
+        out.select(
             F.col("w.start").alias("hour"), "event_type", "n", "avg_value"
         )
         .orderBy("hour", "event_type")
@@ -1281,6 +1163,7 @@ def stream_buslog_backlog_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BENCH_FULL's queries_phases.  Observational only — both phases
     # stay inside the timed region.
     _QP = "stream_buslog_backlog_drain"
+    view = memory_view(_QP)
     try:
         with phase(spark, _QP, "produce"):
             _produce(sliced_batch.where(F.col("event_id") % 20 == 0))
@@ -1302,11 +1185,10 @@ def stream_buslog_backlog_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed = consumed.groupBy(
             F.window("ts", "1 hour").alias("w"), F.col("event_type")
         ).agg(F.count("*").alias("n"), davg("value", "avg_value"))
-        qname = _fresh_sink_name("stream_buslog_backlog_drain")
-        with _stream_shuffle_partitions(spark):
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
             q = (
                 windowed.writeStream.format("memory")
-                .queryName(qname)
+                .queryName(view)
                 .outputMode("complete")
                 .option(
                     "checkpointLocation", os.path.join(root, "_ck_consume")
@@ -1327,34 +1209,29 @@ def stream_buslog_backlog_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             # backlog exists, then the backlog drained.  The offset cap
             # still bounds every micro-batch, so the ≥3 capped-trigger
             # drain shape is unchanged; the 50 ms cadence only trims
-            # dead time between capped batches.
-            with phase(spark, _QP, "drain"):
-                _process_all_available(q)  # seed tranche absorbed
-            with phase(spark, _QP, "produce"):
-                _produce(sliced_batch.where(F.col("event_id") % 20 != 0))
-            with phase(spark, _QP, "drain"):
-                _process_all_available(q)  # backlog drained
-            q.stop()
-            # Contract check on a MONOTONE metric: the complete-mode
-            # sink's Σn counts every consumed event exactly once.
-            consumed_total = (
-                spark.table(qname).agg(F.sum("n")).collect()[0][0] or 0
-            )
-            if consumed_total != n_total:
-                raise RuntimeError(
-                    f"drain consumed {consumed_total} of {n_total}"
-                )
-        return (
-            spark.table(qname)
-            .select(
-                F.col("w.start").alias("hour"),
-                "event_type",
-                "n",
-                "avg_value",
-            )
-            .orderBy("hour", "event_type")
-        )
+            # dead time between capped batches.  The query is stopped
+            # on every path: a failed phase must not leave it running
+            # over the checkpoint the outer finally deletes.
+            try:
+                with phase(spark, _QP, "drain"):
+                    process_all_available(q)  # seed tranche absorbed
+                with phase(spark, _QP, "produce"):
+                    _produce(sliced_batch.where(F.col("event_id") % 20 != 0))
+                with phase(spark, _QP, "drain"):
+                    process_all_available(q)  # backlog drained
+            finally:
+                q.stop()
+        out = spark.table(view)
+        # Contract check on a MONOTONE metric: the complete-mode
+        # sink's Σn counts every consumed event exactly once.
+        consumed_total = out.agg(F.sum("n")).collect()[0][0] or 0
+        if consumed_total != n_total:
+            raise RuntimeError(f"drain consumed {consumed_total} of {n_total}")
+        return out.select(
+            F.col("w.start").alias("hour"), "event_type", "n", "avg_value"
+        ).orderBy("hour", "event_type")
     finally:
+        spark.catalog.dropTempView(view)
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -1414,19 +1291,9 @@ def stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("vol"),
     )
-    qname = _fresh_sink_name("stream_ohlc_hourly")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(windowed, "stream_ohlc_hourly")
     return (
-        spark.table(qname)
-        .select(
+        out.select(
             "event_type",
             F.col("w.start").alias("hr"),
             "n",

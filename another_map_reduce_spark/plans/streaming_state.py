@@ -19,13 +19,15 @@ from pyspark.sql import functions as F
 # registered; reusing the identical SQL object is anti-drift by
 # construction (the two rows can't diverge silently).
 import another_map_reduce_spark.plans.relational as _relational  # noqa: F401
-from another_map_reduce_spark.plans.relational import (
-    _events_readstream,
-    _fresh_sink_name,
-    _stream_shuffle_partitions,
-)
+from another_map_reduce_spark.plans.relational import _events_readstream
 from another_map_reduce_spark.queries import ORACLES, register
+from another_map_reduce_spark.session import scoped_conf
 from another_map_reduce_spark.sources.tables import load_table
+from another_map_reduce_spark.streaming.drain import (
+    drain,
+    drain_to_memory,
+    memory_view,
+)
 from another_map_reduce_spark.streaming.stateful import funnel_stages
 
 
@@ -53,20 +55,9 @@ def stream_funnel_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _events_readstream(spark, sf_dir).select(
         "user_id", "event_type", "ts"
     )
-    qname = _fresh_sink_name("stream_funnel")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            funnel_stages(raw)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(funnel_stages(raw), "stream_funnel", mode="update")
     per_user = (
-        spark.table(qname)
-        .groupBy("user_id")
+        out.groupBy("user_id")
         .agg(F.max("stage_idx").alias("stage"))
     )
     counts = per_user.agg(
@@ -134,7 +125,6 @@ def stream_join_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     views = raw.where(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts"
     )
-    qname = _fresh_sink_name("stream_join_pv")
     # the join holds FOUR state stores per partition, so drain width
     # matters most here of all the streaming rows.  r13 interleaved
     # A/B at sf0.1 (5 reps each, warm medians): width 2 = 3.9 s
@@ -144,19 +134,13 @@ def stream_join_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wins and is STABLE (the r12 "regression" was width-8 store
     # constants amplified by host noise).  At scale the same knob is
     # sized to state volume per partition, not downward.
-    with _stream_shuffle_partitions(spark, n=2):
-        q = (
-            purchases_with_recent_view(purchases, views)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(
+        purchases_with_recent_view(purchases, views),
+        "stream_join_pv",
+        width=2,
+    )
     return (
-        spark.table(qname)
-        .groupBy(F.col("purchase_id").alias("event_id"))
+        out.groupBy(F.col("purchase_id").alias("event_id"))
         .agg(F.count("*").alias("n_views"))
         .orderBy("event_id")
     )
@@ -199,20 +183,11 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _events_readstream(spark, sf_dir).select(
         "event_id", "event_type", "ts"
     )
-    qname = _fresh_sink_name("stream_dedup")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            dedup_stream(raw, ["event_id", "event_type"])
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(
+        dedup_stream(raw, ["event_id", "event_type"]), "stream_dedup"
+    )
     return (
-        spark.table(qname)
-        .groupBy("event_type")
+        out.groupBy("event_type")
         .agg(F.count("*").alias("n_unique"))
         .orderBy("event_type")
     )
@@ -252,19 +227,9 @@ def stream_static_join_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = raw.join(
         static_cust, raw["user_id"] == static_cust["c_custkey"], "inner"
     )
-    qname = _fresh_sink_name("stream_static")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(joined, "stream_static")
     return (
-        spark.table(qname)
-        .groupBy(F.col("c_mktsegment").alias("mktsegment"))
+        out.groupBy(F.col("c_mktsegment").alias("mktsegment"))
         .agg(
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
@@ -321,19 +286,9 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("n"))
     )
-    qname = _fresh_sink_name("stream_sliding")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(windowed, "stream_sliding")
     return (
-        spark.table(qname)
-        .select(F.col("win.start").alias("win_start"), "event_type", "n")
+        out.select(F.col("win.start").alias("win_start"), "event_type", "n")
         .orderBy("win_start", "event_type")
     )
 
@@ -413,17 +368,14 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merged.write.mode("overwrite").parquet(state)
 
-    with _stream_shuffle_partitions(spark):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(_merge)
+        .option("checkpointLocation", ckpt),
+        "stream_foreachbatch_upsert",
+    )
 
     dec = F.col("value").cast("decimal(38,6)")
     return (
@@ -660,25 +612,27 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    qname = _fresh_sink_name("stream_late_accounting")
-    with _stream_shuffle_partitions(spark):
-        q = (
+    # drain() rather than drain_to_memory: the per-batch progress of
+    # the finished query is part of the answer
+    view = memory_view("stream_late_accounting")
+    try:
+        q = drain(
             windowed.writeStream.format("memory")
-            .queryName(qname)
             .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(root, "ckpt")),
+            view,
         )
-        q.awaitTermination()
-        dropped_windows = 0
-        data_batches = 0
-        for p in q.recentProgress:
-            obj = json.loads(p.json) if hasattr(p, "json") else p
-            if obj.get("numInputRows", 0) > 0:
-                data_batches += 1
-            for op in obj.get("stateOperators", []):
-                dropped_windows += op.get("numRowsDroppedByWatermark", 0)
+        out = spark.table(view)
+    finally:
+        spark.catalog.dropTempView(view)
+    dropped_windows = 0
+    data_batches = 0
+    for p in q.recentProgress:
+        obj = json.loads(p.json) if hasattr(p, "json") else p
+        if obj.get("numInputRows", 0) > 0:
+            data_batches += 1
+        for op in obj.get("stateOperators", []):
+            dropped_windows += op.get("numRowsDroppedByWatermark", 0)
 
     # lost INPUT rows: the b2 slice against the LATE-DATA FILTER
     # watermark in force for that batch — Spark filters late input
@@ -696,7 +650,7 @@ def stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .count()
     )
-    return spark.table(qname).agg(
+    return out.agg(
         F.count(F.lit(1)).cast("long").alias("n_windows"),
         F.sum("n").cast("long").alias("total_events"),
         F.lit(dropped_windows).cast("long").alias("windows_dropped_late"),
@@ -765,20 +719,11 @@ def stream_join_outer_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     views = raw.where(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts"
     )
-    qname = _fresh_sink_name("stream_join_outer")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            purchases_with_view_outer(purchases, views)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(
+        purchases_with_view_outer(purchases, views), "stream_join_outer"
+    )
     return (
-        spark.table(qname)
-        .groupBy(F.col("purchase_id").alias("event_id"))
+        out.groupBy(F.col("purchase_id").alias("event_id"))
         .agg(F.count("view_id").cast("long").alias("n_views"))
         .orderBy("event_id")
     )
@@ -889,20 +834,17 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("w.start").alias("hour"), "event_type", "n", "sum_value"
             )
         )
-        q = (
+        drain(
             windowed.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "stream_checkpoint_restart",
         )
-        q.awaitTermination()
 
-    with _stream_shuffle_partitions(spark):
-        _run()  # run 1: slice A only
-        ev.where(F.col("ts") >= lit_cut).write.mode("append").parquet(src)
-        _run()  # run 2: a NEW query recovers from the checkpoint
+    _run()  # run 1: slice A only
+    ev.where(F.col("ts") >= lit_cut).write.mode("append").parquet(src)
+    _run()  # run 2: a NEW query recovers from the checkpoint
 
     return (
         spark.read.parquet(sink)
@@ -984,18 +926,9 @@ def stream_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     views = raw.where(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts"
     )
-    qname = _fresh_sink_name("stream_join_full")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            purchases_with_view_full(purchases, views)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    out = spark.table(qname)
+    out = drain_to_memory(
+        purchases_with_view_full(purchases, views), "stream_join_full"
+    )
     p_side = (
         out.where(F.col("purchase_id").isNotNull())
         .groupBy(F.col("purchase_id").alias("event_id"))
@@ -1067,19 +1000,9 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = session_agg(
         raw, gap="30 minutes", watermark="30 minutes", ts_col="ts"
     )
-    qname = _fresh_sink_name("stream_sessions")
-    with _stream_shuffle_partitions(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    out = drain_to_memory(sessions, "stream_sessions")
     return (
-        spark.table(qname)
-        .select(
+        out.select(
             "user_id",
             "sess_start",
             (F.col("sess_end") - F.expr("INTERVAL 30 minutes")).alias(
@@ -1236,47 +1159,34 @@ def stream_session_close_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     schema = spark.read.parquet(src).schema
+    # Width 8 (r14 — VERDICT r13 #3, reversing the r12 narrowing to
+    # 4): unlike the JVM-stateful drains, TWS runs a PYTHON state
+    # machine serially over each partition's keys every batch, so
+    # the drain is Python-compute-bound, not store-constant-bound —
+    # width parallelises it.  Interleaved A/B at sf0.1 (fresh JVM,
+    # medians-of-3, 3 rounds + 2 from the 3-row matrix): width 4 =
+    # [46.3, 28.1, 23.0, 17.3, 18.5], width 8 = [10.2, 18.9, 10.2,
+    # 15.5, 10.2], width 16 = [17.9, 15.0, 8.3] — width 4 is the
+    # worst in every paired round; 8 ≈ 16 with fewer RocksDB opens.
+    # At scale the knob sizes to keys-per-partition × per-key
+    # Python cost, not downward.
     provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, ROCKSDB_PROVIDER)
-    qname = _fresh_sink_name("stream_tws_close")
-    try:
-        # Width 8 (r14 — VERDICT r13 #3, reversing the r12 narrowing to
-        # 4): unlike the JVM-stateful drains, TWS runs a PYTHON state
-        # machine serially over each partition's keys every batch, so
-        # the drain is Python-compute-bound, not store-constant-bound —
-        # width parallelises it.  Interleaved A/B at sf0.1 (fresh JVM,
-        # medians-of-3, 3 rounds + 2 from the 3-row matrix): width 4 =
-        # [46.3, 28.1, 23.0, 17.3, 18.5], width 8 = [10.2, 18.9, 10.2,
-        # 15.5, 10.2], width 16 = [17.9, 15.0, 8.3] — width 4 is the
-        # worst in every paired round; 8 ≈ 16 with fewer RocksDB opens.
-        # At scale the knob sizes to keys-per-partition × per-key
-        # Python cost, not downward.
-        with _stream_shuffle_partitions(spark, 8):
-            stream = session_close_v2(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src),
-                gap_minutes=_TWS_GAP_MS // 60_000,
-                watermark=f"{_TWS_DELAY_MS // 60_000} minutes",
-            )
-            q = (
-                stream.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
+    with scoped_conf(spark, {provider_key: ROCKSDB_PROVIDER}):
+        stream = session_close_v2(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            gap_minutes=_TWS_GAP_MS // 60_000,
+            watermark=f"{_TWS_DELAY_MS // 60_000} minutes",
+        )
+        out = drain_to_memory(
+            stream,
+            "stream_tws_close",
+            width=8,
+            checkpoint=os.path.join(root, "ckpt"),
+        )
     return (
-        spark.table(qname)
-        .select(
+        out.select(
             F.col("user_id").cast("long").alias("user_id"),
             F.col("session_end").cast("long").alias("session_end"),
         )
@@ -1326,7 +1236,7 @@ def _run_rate_soak(
     for at least ``min_batches`` micro-batches under a real
     processing-time trigger (NOT availableNow — this is the
     steady-state cadence every other streaming row's finite drain
-    skips), then stop.  Returns (memory-sink view name, sorted
+    skips), then stop.  Returns (the memory sink's rows, sorted
     (batchId, state numRowsTotal) samples collected while polling)."""
     import time
 
@@ -1349,16 +1259,16 @@ def _run_rate_soak(
             F.sum("value").alias("sum_v"),
         )
     )
-    qname = _fresh_sink_name("stream_rate_soak")
+    view = memory_view("stream_rate_soak")
     # state samples are collected DURING the poll loop (recentProgress
     # retains only the last ~100 updates — a multi-hundred-batch soak
     # would lose its early plateau, exactly the half the flatness
     # assertion compares against)
     samples: dict[int, int] = {}
-    with _stream_shuffle_partitions(spark, 4):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             agg.writeStream.format("memory")
-            .queryName(qname)
+            .queryName(view)
             .outputMode("append")
             .trigger(processingTime="0 seconds")
             .start()
@@ -1380,9 +1290,10 @@ def _run_rate_soak(
                         f"{lp['batchId'] if lp else None})"
                     )
                 time.sleep(0.05)
+            return spark.table(view), sorted(samples.items())
         finally:
             q.stop()
-    return qname, sorted(samples.items())
+            spark.catalog.dropTempView(view)
 
 
 @register("stream_rate_soak_windows", oracle=_SOAK_SQL)
@@ -1417,11 +1328,10 @@ def stream_rate_soak_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window w closes once watermark (= max event − 30 s) passes its
     # end: batch b's max event is start + 10b, so w needs b ≥ w + 4;
     # +2 margin over the returned prefix
-    qname, _ = _run_rate_soak(spark, min_batches=_SOAK_WINDOWS + 6)
+    out, _ = _run_rate_soak(spark, min_batches=_SOAK_WINDOWS + 6)
     cut = _SOAK_START_S + _SOAK_WINDOWS * _SOAK_ADVANCE_S
     return (
-        spark.table(qname)
-        .select(
+        out.select(
             F.col("window.start").cast("long").alias("win_start_s"),
             F.col("key").cast("long").alias("key"),
             F.col("n").cast("long").alias("n"),

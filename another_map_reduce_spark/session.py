@@ -26,6 +26,7 @@ set here once, tuned for scale-out:
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
 import pathlib
@@ -113,6 +114,30 @@ def shuffle_width(spark: SparkSession, default: int = 200) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions", str(default)))
     except (TypeError, ValueError):
         return default
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``spark`` for the body, then put each key back.
+
+    A key that had a value gets it back; a key that had none is unset.
+    Restoring happens even when the body raises.  This mutates the
+    session-global conf, so it is not reentrant for one key and not
+    safe against queries planned concurrently on the same session; the
+    driver, bench and test harnesses run queries serially.  Concurrent
+    callers should each use their own ``spark.newSession()``.
+    """
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _export_protoshim_pythonpath() -> None:

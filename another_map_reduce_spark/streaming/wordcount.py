@@ -36,18 +36,3 @@ def streaming_word_count(
         .agg(F.count("*").alias("cnt"))
     )
 
-
-def run_to_memory(stream_df: DataFrame, table_name: str, mode: str = "complete"):
-    """Drain all available input into an in-memory sink (test harness).
-
-    Returns the StreamingQuery (already processed-all + stopped).
-    """
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(mode)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return q

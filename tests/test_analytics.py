@@ -522,11 +522,12 @@ def test_bloom_filter_join_pruning_plan_and_equivalence(spark, sf_dir):
     fact scan) — and the filtered plan must produce exactly the default
     plan's rows (the filter is semantics-free pruning)."""
     from another_map_reduce_spark.plans.analytics import (
-        _bloom_filter_confs,
+        _BLOOM_FILTER_CONFS,
         _bloom_pruned_join,
     )
+    from another_map_reduce_spark.session import scoped_conf
 
-    with _bloom_filter_confs(spark):
+    with scoped_conf(spark, _BLOOM_FILTER_CONFS):
         df = _bloom_pruned_join(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan

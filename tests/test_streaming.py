@@ -9,16 +9,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from another_map_reduce_spark.operators.wordcount import word_count
+from another_map_reduce_spark.session import scoped_conf
 from another_map_reduce_spark.sources.tables import load_table
-from another_map_reduce_spark.streaming.wordcount import (
-    run_to_memory,
-    streaming_word_count,
-)
+from another_map_reduce_spark.streaming.drain import drain, drain_to_memory
+from another_map_reduce_spark.streaming.wordcount import streaming_word_count
 from another_map_reduce_spark.streaming.windows import (
     session_agg,
     sliding_agg,
     tumbling_agg,
 )
+
+# Drains in this module run at the session fixture's shuffle width.
+_W = 4
 
 
 def test_streaming_wordcount_matches_batch(spark, tmp_path):
@@ -29,10 +31,8 @@ def test_streaming_wordcount_matches_batch(spark, tmp_path):
 
     stream = streaming_word_count(spark, str(d))
     assert stream.isStreaming
-    run_to_memory(stream, "wc_stream", mode="complete")
-    got = {
-        r.word: r.cnt for r in spark.sql("SELECT * FROM wc_stream").collect()
-    }
+    rows = drain_to_memory(stream, "wc_stream", mode="complete", width=_W)
+    got = {r.word: r.cnt for r in rows.collect()}
 
     batch = word_count(
         spark.read.text(str(d)).select(F.col("value").alias("text"))
@@ -101,26 +101,154 @@ def test_tumbling_stream_matches_batch(spark, sf_dir, events_stream_dir):
     # complete mode: append would withhold windows the watermark hasn't
     # closed yet, which for a finite source is the trailing ones.
     stream = tumbling_agg(_read_events_stream(spark, events_stream_dir))
-    run_to_memory(stream, "tumble_stream", mode="complete")
-    got = spark.sql("SELECT * FROM tumble_stream")
+    got = drain_to_memory(stream, "tumble_stream", mode="complete", width=_W)
     batch = tumbling_agg(load_table(spark, sf_dir, "events"))
     assert _rounded(got.collect()) == _rounded(batch.collect())
 
 
 def test_sliding_stream_matches_batch(spark, sf_dir, events_stream_dir):
     stream = sliding_agg(_read_events_stream(spark, events_stream_dir))
-    run_to_memory(stream, "slide_stream", mode="complete")
-    got = spark.sql("SELECT * FROM slide_stream")
+    got = drain_to_memory(stream, "slide_stream", mode="complete", width=_W)
     batch = sliding_agg(load_table(spark, sf_dir, "events"))
     assert _rounded(got.collect()) == _rounded(batch.collect())
 
 
 def test_session_stream_matches_batch(spark, sf_dir, events_stream_dir):
     stream = session_agg(_read_events_stream(spark, events_stream_dir))
-    run_to_memory(stream, "sess_stream", mode="complete")
-    got = spark.sql("SELECT * FROM sess_stream")
+    got = drain_to_memory(stream, "sess_stream", mode="complete", width=_W)
     batch = session_agg(load_table(spark, sf_dir, "events"))
     assert _rounded(got.collect()) == _rounded(batch.collect())
+
+
+def _temp_views(spark):
+    return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+
+def test_drain_timeout_stops_query_and_names_it(spark, tmp_path, monkeypatch):
+    """A drain still running at DRAIN_TIMEOUT_S is stopped and fails
+    loudly with the query's name; the conf scope is undone.  The
+    watchdog of process_all_available does the same."""
+    import time
+
+    from another_map_reduce_spark.streaming import drain as drain_module
+
+    d = tmp_path / "wedged"
+    d.mkdir()
+    (d / "a.txt").write_text("x")
+    monkeypatch.setattr(drain_module, "DRAIN_TIMEOUT_S", 1)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+
+    def wedged_writer():
+        return spark.readStream.text(str(d)).writeStream.foreachBatch(
+            lambda df, batch_id: time.sleep(3)  # blocks past the 1 s limit
+        )
+
+    with pytest.raises(TimeoutError, match="t_wedged_drain"):
+        drain(wedged_writer(), "t_wedged_drain", width=3)
+    assert spark.streams.active == []
+    assert spark.conf.get(key) == before
+    # the processing-time wait is held to the same limit
+    q = wedged_writer().queryName("t_wedged_wait").start()
+    with pytest.raises(TimeoutError, match="t_wedged_wait"):
+        drain_module.process_all_available(q)
+    assert spark.streams.active == []
+
+
+def test_drain_to_memory_drops_its_views(spark, tmp_path):
+    """Two drains under one name return their own rows, which still
+    collect after the sink views are gone."""
+    d = tmp_path / "words"
+    d.mkdir()
+    (d / "a.txt").write_text("a\nb\nb")
+    stream = spark.readStream.text(str(d))
+    before = _temp_views(spark)
+    rows = drain_to_memory(stream, "t_views", width=_W)
+    counts = drain_to_memory(
+        stream.groupBy("value").count(), "t_views", mode="complete", width=_W
+    )
+    assert _temp_views(spark) == before
+    assert sorted(r.value for r in rows.collect()) == ["a", "b", "b"]
+    assert {r.value: r["count"] for r in counts.collect()} == {"a": 1, "b": 2}
+
+
+def test_drain_scopes_width_with_and_without_writer_session(spark, tmp_path):
+    """The stream runs at the drain's width, whether the session comes
+    from the writer or, for a writer without one, the active session."""
+    d = tmp_path / "width"
+    d.mkdir()
+    (d / "a.txt").write_text("x")
+    seen = []
+
+    def record(df, batch_id):
+        seen.append(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+    class _WriterWithoutSession:
+        def __init__(self, writer):
+            self._writer = writer
+
+        def queryName(self, name):
+            return self._writer.queryName(name)
+
+    stream = spark.readStream.text(str(d))
+    drain(stream.writeStream.foreachBatch(record), "t_width", width=3)
+    drain(
+        _WriterWithoutSession(stream.writeStream.foreachBatch(record)),
+        "t_width_active_session",
+        width=5,
+    )
+    assert seen == ["3", "5"]
+
+
+def test_scoped_conf_restores_set_and_absent_keys(spark):
+    set_key, absent_key = "spark.sql.shuffle.partitions", "spark.amrs.t.absent"
+    before = spark.conf.get(set_key)
+    with scoped_conf(spark, {set_key: "3", absent_key: "x"}):
+        assert spark.conf.get(set_key) == "3"
+        assert spark.conf.get(absent_key) == "x"
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(absent_key, None) is None
+    with pytest.raises(RuntimeError, match="body failed"):
+        with scoped_conf(spark, {set_key: "3", absent_key: "x"}):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(absent_key, None) is None
+
+
+def test_streaming_waits_are_bounded():
+    """Only streaming/drain.py may start an availableNow drain or wait
+    on a streaming query without a time limit (no Spark needed)."""
+    import ast
+    import pathlib
+
+    import another_map_reduce_spark
+
+    root = pathlib.Path(another_map_reduce_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "streaming" / "drain.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            attr = node.func.attr
+            if (
+                (
+                    attr == "trigger"
+                    and any(k.arg == "availableNow" for k in node.keywords)
+                )
+                or (
+                    attr == "awaitTermination"
+                    and not node.args
+                    and not node.keywords
+                )
+                or attr == "processAllAvailable"
+            ):
+                found.append(f"{path.relative_to(root)}:{node.lineno} {attr}")
+    assert not found, f"unbounded streaming waits outside drain.py: {found}"
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
@@ -237,10 +365,9 @@ def test_stream_stream_range_join(spark, sf_dir, events_stream_dir):
     purchases = src.where(F.col("event_type") == "purchase")
     views = src.where(F.col("event_type") == "view")
     stream = purchases_with_recent_view(purchases, views)
-    run_to_memory(stream, "ss_join", mode="append")
     got = {
         (r.purchase_id, r.view_id)
-        for r in spark.sql("SELECT * FROM ss_join").collect()
+        for r in drain_to_memory(stream, "ss_join", width=_W).collect()
     }
 
     ev = load_table(spark, sf_dir, "events")
@@ -333,40 +460,28 @@ def _assert_funnel_stream_matches_batch(
     for i in range(n_files):
         ev.iloc[i * step : (i + 1) * step].to_parquet(d / f"b{i}.parquet")
     schema = spark.read.parquet(str(d)).schema
-    prev_conf = {}
-    for k, v in (conf or {}).items():
-        prev_conf[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, conf or {}):
         stream = funnel_fn(spark.readStream.schema(schema).parquet(str(d)))
-        writer = (
-            stream.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("update")
-        )
         if available_now:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        try:
-            if available_now:
-                q.awaitTermination()
-            else:
+            out = drain_to_memory(stream, qname, mode="update", width=_W)
+        else:
+            q = (
+                stream.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode("update")
+                .start()
+            )
+            try:
                 q.processAllAvailable()
-            final = {
-                r.user_id: r.stage_idx
-                for r in spark.sql(
-                    "SELECT user_id, max(stage_idx) AS stage_idx"
-                    f" FROM {qname} GROUP BY user_id"
-                ).collect()
-            }
-        finally:
-            q.stop()
-    finally:
-        for k, v in prev_conf.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+            finally:
+                q.stop()
+            out = spark.table(qname)
+        final = {
+            r.user_id: r.stage_idx
+            for r in out.groupBy("user_id")
+            .agg(F.max("stage_idx").alias("stage_idx"))
+            .collect()
+        }
     n_by_stage = {s: 0 for s in (1, 2, 3)}
     for stage in final.values():
         # deepest stage reached implies all shallower stages
@@ -480,17 +595,9 @@ def test_append_watermark_boundary(spark, tmp_path):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    q = (
-        windowed.writeStream.format("memory")
-        .queryName("wm_boundary")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     ends = sorted(
         r.e.strftime("%H:%M")
-        for r in spark.table("wm_boundary")
+        for r in drain_to_memory(windowed, "wm_boundary", width=_W)
         .select(F.col("w.end").alias("e"))
         .collect()
     )
@@ -596,9 +703,7 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
         )
     schema = spark.read.parquet(str(d)).schema
     key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
+    with scoped_conf(spark, {key: ROCKSDB_PROVIDER}):
         stream = session_close_v2(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -606,27 +711,10 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
             gap_minutes=30,
             watermark="10 minutes",
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("tws_timers")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        out = drain_to_memory(
+            stream, "tws_timers", width=_W, checkpoint=str(tmp_path / "ckpt")
         )
-        q.awaitTermination(240)
-        got = {
-            (r.user_id, r.session_end)
-            for r in spark.sql("SELECT * FROM tws_timers").collect()
-        }
-    finally:
-        for qq in spark.streams.active:
-            if qq.name == "tws_timers":
-                qq.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        got = {(r.user_id, r.session_end) for r in out.collect()}
     gap = 30 * 60_000
     ms = lambda t: int(t.value // 1_000_000)  # noqa: E731
     want = {
@@ -698,9 +786,7 @@ def test_transform_with_state_list_and_map_state(spark, tmp_path):
     pdf.to_parquet(d / "b0.parquet")
     schema = spark.read.parquet(str(d)).schema
     key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
+    with scoped_conf(spark, {key: ROCKSDB_PROVIDER}):
         stream = (
             spark.readStream.schema(schema)
             .parquet(str(d))
@@ -712,27 +798,14 @@ def test_transform_with_state_list_and_map_state(spark, tmp_path):
                 timeMode="None",
             )
         )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("tws_listmap")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "lm_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        out = drain_to_memory(
+            stream,
+            "tws_listmap",
+            mode="update",
+            width=_W,
+            checkpoint=str(tmp_path / "lm_ckpt"),
         )
-        q.awaitTermination(240)
-        got = {
-            r.user_id: (r.n_events, r.n_types)
-            for r in spark.sql("SELECT * FROM tws_listmap").collect()
-        }
-    finally:
-        for qq in spark.streams.active:
-            if qq.name == "tws_listmap":
-                qq.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        got = {r.user_id: (r.n_events, r.n_types) for r in out.collect()}
     want = {
         u: (len(g), g["event_type"].nunique())
         for u, g in pdf.groupby("user_id")
@@ -816,7 +889,7 @@ def test_late_filter_uses_previous_batch_watermark(spark, tmp_path):
                        allow_truncated_timestamps=True)
         os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
     schema = spark.read.parquet(str(d)).schema
-    q = (
+    windowed = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
@@ -824,14 +897,14 @@ def test_late_filter_uses_previous_batch_watermark(spark, tmp_path):
         .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
-        .writeStream.format("memory")
-        .queryName("late_filter_probe")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    q = drain(
+        windowed.writeStream.format("memory")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt")),
+        "late_filter_probe",
+        width=_W,
+    )
     rows = {
         r.w.start.isoformat(): r.n
         for r in spark.table("late_filter_probe").collect()
@@ -980,38 +1053,24 @@ def _run_session_close_relay(spark, tmp_path, files, name):
         os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
     schema = spark.read.parquet(str(d)).schema
     key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        q = (
+    with scoped_conf(spark, {key: ROCKSDB_PROVIDER}):
+        out = drain_to_memory(
             session_close_v2(
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", 1)
                 .parquet(str(d)),
                 gap_minutes=30,
                 watermark="10 minutes",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            ),
+            name,
+            width=_W,
+            checkpoint=str(tmp_path / f"{name}_ckpt"),
         )
-        q.awaitTermination(240)
         t0_ms = int(pd.Timestamp("2024-01-01 00:00:00").value // 1_000_000)
         return {
             (r.user_id, (r.session_end - t0_ms) / 60_000.0)
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
+            for r in out.collect()
         }
-    finally:
-        for qq in spark.streams.active:
-            if qq.name == name:
-                qq.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def test_tws_timer_final_flush_batch(spark, tmp_path):
@@ -1138,10 +1197,8 @@ def test_tws_initial_state_bootstrap(spark, tmp_path):
         ).groupBy("user_id")
     )
     key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        q = (
+    with scoped_conf(spark, {key: ROCKSDB_PROVIDER}):
+        out = drain_to_memory(
             spark.readStream.schema(schema)
             .parquet(str(src))
             .groupBy("user_id")
@@ -1151,27 +1208,13 @@ def test_tws_initial_state_bootstrap(spark, tmp_path):
                 outputMode="Update",
                 timeMode="None",
                 initialState=init,
-            )
-            .writeStream.format("memory")
-            .queryName("tws_init")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "init_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "tws_init",
+            mode="update",
+            width=_W,
+            checkpoint=str(tmp_path / "init_ckpt"),
         )
-        q.awaitTermination(240)
-        got = {
-            r.user_id: r.total
-            for r in spark.sql("SELECT * FROM tws_init").collect()
-        }
-    finally:
-        for qq in spark.streams.active:
-            if qq.name == "tws_init":
-                qq.stop()
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        got = {r.user_id: r.total for r in out.collect()}
     # user 1: 100 (bootstrap) + 7 + 3; user 3: no bootstrap, 0 + 5.
     # user 2 has initial state but no input: update mode emits only
     # keys that produced rows — absence is itself pinned here.
@@ -1189,7 +1232,6 @@ def test_full_outer_join_eviction_boundaries(spark, tmp_path):
 
     from another_map_reduce_spark.plans.streaming_state import (
         _events_readstream,
-        _fresh_sink_name,
     )
     from another_map_reduce_spark.streaming.joins import (
         purchases_with_view_full,
@@ -1226,17 +1268,11 @@ def test_full_outer_join_eviction_boundaries(spark, tmp_path):
     views = raw.where(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts"
     )
-    qn = _fresh_sink_name("t_full_outer_probe")
-    q = (
-        purchases_with_view_full(purchases, views)
-        .writeStream.format("memory")
-        .queryName(qn)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(qn).collect()
+    out = drain_to_memory(
+        purchases_with_view_full(purchases, views),
+        "t_full_outer_probe",
+        width=_W,
+    ).collect()
     assert sorted(
         r.purchase_id for r in out if r.view_id is None
     ) == [12, 13]
@@ -1290,15 +1326,14 @@ def test_checkpoint_restart_reads_only_new_files(spark, tmp_path):
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
             .select(F.col("w.start").alias("hour"), "event_type", "n")
         )
-        q = (
+        q = drain(
             windowed.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "t_checkpoint_restart",
+            width=_W,
         )
-        q.awaitTermination()
         return sum(
             json.loads(p.json).get("numInputRows", 0)
             for p in q.recentProgress
@@ -1370,17 +1405,9 @@ def test_stream_ohlc_minby_state_merges_across_microbatches(spark, tmp_path):
             F.max_by("value", ordk).alias("close"),
         )
     )
-    q = (
-        windowed.writeStream.format("memory")
-        .queryName("ohlc_merge")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     bars = {
         r.s.strftime("%H:%M"): (r.n, r.open, r.high, r.low, r.close)
-        for r in spark.table("ohlc_merge")
+        for r in drain_to_memory(windowed, "ohlc_merge", width=_W)
         .select(F.col("w.start").alias("s"), "n", "open", "high", "low", "close")
         .collect()
     }
